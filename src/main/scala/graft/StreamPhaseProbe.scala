@@ -14,18 +14,20 @@ object StreamPhaseProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val spark = GraftSession.local()
-    spark.streams.addListener(new org.apache.spark.sql.streaming.StreamingQueryListener {
-      import org.apache.spark.sql.streaming.StreamingQueryListener._
-      override def onQueryStarted(e: QueryStartedEvent): Unit = ()
-      override def onQueryTerminated(e: QueryTerminatedEvent): Unit = ()
-      override def onQueryProgress(e: QueryProgressEvent): Unit = {
-        val p = e.progress
-        val d = p.durationMs
-        val states = Option(p.stateOperators).map(_.map(s =>
-          s"commit=${s.allUpdatesTimeMs}/${s.commitTimeMs}ms rows=${s.numRowsTotal}")
-          .mkString(" | ")).getOrElse("")
-        System.err.println(s"[probe] batch=${p.batchId} rows=${p.numInputRows} " +
-          s"durations=$d state: $states")
+    // a SparkListener, not spark.streams.addListener: replays run their
+    // queries in session clones, whose progress events reach only the
+    // context-wide listener bus
+    spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
+      override def onOtherEvent(e: org.apache.spark.scheduler.SparkListenerEvent): Unit = e match {
+        case e: org.apache.spark.sql.streaming.StreamingQueryListener.QueryProgressEvent =>
+          val p = e.progress
+          val d = p.durationMs
+          val states = Option(p.stateOperators).map(_.map(s =>
+            s"commit=${s.allUpdatesTimeMs}/${s.commitTimeMs}ms rows=${s.numRowsTotal}")
+            .mkString(" | ")).getOrElse("")
+          System.err.println(s"[probe] batch=${p.batchId} rows=${p.numInputRows} " +
+            s"durations=$d state: $states")
+        case _ =>
       }
     })
     Bench.streamWarmup(spark)

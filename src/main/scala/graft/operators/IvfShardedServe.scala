@@ -120,18 +120,13 @@ object IvfShardedServe {
     // demoted scan may SPLIT files and break cell-partition locality)
     val autoKey = "spark.sql.sources.bucketing.autoBucketedScan.enabled"
     val prevAuto = s.conf.getOption(autoKey)
-    val (input, alignedUsed) = try {
+    try {
       s.conf.set(autoKey, "false")
-      val (in, aligned) = centroidBuildInput(postings)
-      (materializeCentroids(in), aligned)
+      materializeCentroids(centroidBuildInput(postings)._1)
     } finally prevAuto match {
       case Some(v) => s.conf.set(autoKey, v)
       case None => s.conf.unset(autoKey)
     }
-    if (sys.env.contains("GRAFT_REPLAY_DEBUG"))
-      System.err.println(s"[ivf] centroid build path: " +
-        (if (alignedUsed) "bucket-aligned (no exchange)" else "shuffle fallback"))
-    input
   }
 
   /** The deterministic per-cell sequential accumulation + collect — shared

@@ -1,7 +1,7 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
-import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.graftops.Bridge
 
 /** Per-query streaming metrics (reference: late-event counter
   * `lateEventsDropped` in TransformStatefulP.java:100-106 / SlidingWindowP;
@@ -69,50 +69,21 @@ object Metrics {
 }
 
 /** Deterministic replay harness: runs a finite dataset through a real
-  * Structured Streaming query (MemoryStream → transform → memory sink) and
-  * returns the final result table. This is how the driver's batch-oracle
-  * correctness gate exercises genuine streaming execution (state stores,
-  * watermarks, window merging) — the stream–batch equivalence strategy from
-  * FIXTURES.md §3, mirroring the reference's processor-level replay tests
+  * Structured Streaming query (parquet chunk files → transform → a sink that
+  * keeps each micro-batch's output in executor blocks) and returns the whole
+  * output as one frame. This is how the batch-oracle correctness gate
+  * exercises genuine streaming execution (state stores, watermarks, window
+  * merging) — the stream–batch equivalence strategy from FIXTURES.md §3,
+  * mirroring the reference's processor-level replay tests
   * (core/test/TestSupport.java:100-130).
   */
 object StreamRunner {
 
   private val counter = new java.util.concurrent.atomic.AtomicInteger(0)
 
-  /** Replay `input` through `transform` and collect the sink table.
-    * `outputMode` should be "complete" for aggregations, "append" for
-    * stateful/flatMap ops.
-    */
-  def replay[T: org.apache.spark.sql.Encoder](
-      spark: SparkSession, input: Seq[T], outputMode: String)(
-      transform: DataFrame => DataFrame): DataFrame = {
-    implicit val sqlCtx = spark.sqlContext
-    val mem = MemoryStream[T]
-    val name = s"graft_replay_${counter.incrementAndGet()}"
-    // feed in two chunks so multiple micro-batches (and state updates) happen
-    val chunks = input.grouped(math.max(1, input.size / 2 + 1)).toSeq
-    chunks.headOption.foreach(c => mem.addData(c))
-    // replay-local state partitioning: a finite replay doesn't need the full
-    // engine shuffle width; fewer state-store partitions = less per-batch
-    // overhead (the sink table is tiny either way)
-    val prevParts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    val q =
-      try transform(mem.toDF()).writeStream
-        .format("memory").queryName(name).outputMode(outputMode).start()
-      finally spark.conf.set("spark.sql.shuffle.partitions", prevParts)
-    try {
-      q.processAllAvailable()
-      chunks.drop(1).foreach { c => mem.addData(c); q.processAllAvailable() }
-    } finally q.stop()
-    spark.table(name)
-  }
-
   /** File-stream replay: runs a finite DataFrame through a real streaming query
     * from a PARQUET FILE SOURCE — the production ingestion shape (vectorized
-    * scan → watermark → stateful op → sink) with ZERO driver-side rows, unlike
-    * `replay` which collects the fixture into a MemoryStream.
+    * scan → watermark → stateful op → sink) with ZERO driver-side rows.
     *
     * The input is split into `chunks` time-range files (repartitionByRange on
     * `tsCol`) and each micro-batch consumes exactly one chunk, in time order —
@@ -122,6 +93,10 @@ object StreamRunner {
     * row is dropped as late, which is what makes a replayed stream
     * bit-comparable to a batch oracle. At 100 TB this same shape is the real
     * deployment: time-partitioned landing files, one trigger per partition.
+    *
+    * The returned frame holds the rows every micro-batch emitted, in batch
+    * order — update mode yields every revision of a key — so `outputMode` is
+    * "append" or "update"; "complete" is rejected.
     */
   /** @param tails extra single-batch chunks appended AFTER the input chunks,
     *   in order — e.g. far-future sentinel rows that advance the watermark so
@@ -222,13 +197,10 @@ object StreamRunner {
     // exercise multi-batch state updates at fixed cost.
     val chunkCount = sys.env.get("SPARK_GRAFT_REPLAY_CHUNKS")
       .map(_.toInt).getOrElse(chunks)
+    require(outputMode != "complete",
+      "replayFiles returns every batch's output rows; complete mode would repeat " +
+        "the whole result table per batch — use update or append")
     val name = s"graft_freplay_${counter.incrementAndGet()}"
-    val debug = sys.env.contains("GRAFT_REPLAY_DEBUG")
-    var t0 = System.nanoTime()
-    def lap(phase: String): Unit = if (debug) {
-      System.err.println(f"[replay $name] $phase ${(System.nanoTime() - t0) / 1e9}%.1fs")
-      t0 = System.nanoTime()
-    }
     def stage(): String = {
       val dir = java.nio.file.Files.createTempDirectory("graft_freplay_base_").toString + "/in"
       input.repartitionByRange(chunkCount, col(tsCol))
@@ -306,7 +278,6 @@ object StreamRunner {
         }
         (dst.toString, Some(work))
       }
-    lap("write-chunks")
     // sentinel placement needs max(ts); the chunk files are already written and
     // range-partitioned ascending, so the LAST chunk alone carries the maximum
     // — a ts-only columnar scan of one chunk dir, not a rescan of the source
@@ -341,35 +312,48 @@ object StreamRunner {
     val schema = org.apache.spark.sql.types.StructType(
       input.schema.fields :+ org.apache.spark.sql.types.StructField(
         "__chunk", org.apache.spark.sql.types.IntegerType))
-    // 4 state-store partitions: each micro-batch pays a per-partition state
-    // commit, and a finite replay's bottleneck is that fixed cost, not data
-    // parallelism (the real engine width stays spark.sql.shuffle.partitions).
-    // No-data micro-batches are disabled: the replay's watermark advancement
-    // is driven entirely by data chunks (incl. sentinel tails), so the extra
-    // empty batches after each processAllAvailable only add commit overhead.
-    val prevParts = spark.conf.get("spark.sql.shuffle.partitions")
-    val prevNoData = spark.conf.get("spark.sql.streaming.noDataMicroBatches.enabled")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    spark.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
-    val q =
-      try transform(
-        spark.readStream.schema(schema)
-          .option("maxFilesPerTrigger", "1")
-          .parquet(inDir).drop("__chunk"))
-        .writeStream.format("memory").queryName(name).outputMode(outputMode).start()
-      finally {
-        spark.conf.set("spark.sql.shuffle.partitions", prevParts)
-        spark.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", prevNoData)
-      }
-    lap("start")
-    try q.processAllAvailable() finally q.stop()
-    lap("process-all")
-    // the memory sink holds the result rows; a tail-extended run's private
-    // copy and any uncacheable (in-memory-input) staging are done — delete
-    // them. A shared file-backed staging stays for the JVM: later replays of
-    // the same input skip the staging write entirely.
+    // The query runs in a clone of the caller's session, so its settings
+    // never touch the caller's conf (a live job in the same session would see
+    // them). 4 state-store partitions: each micro-batch pays a per-partition
+    // state commit, and a finite replay's bottleneck is that fixed cost, not
+    // data parallelism. No-data micro-batches are disabled: the replay's
+    // watermark advancement is driven entirely by data chunks (incl. sentinel
+    // tails), so the extra empty batches after each processAllAvailable only
+    // add commit overhead.
+    val replaySession = Bridge.cloneSession(spark)
+    replaySession.conf.set("spark.sql.shuffle.partitions", "4")
+    replaySession.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
+    val out = transform(
+      replaySession.readStream.schema(schema)
+        .option("maxFilesPerTrigger", "1")
+        .parquet(inDir).drop("__chunk"))
+    // each batch's rows stay in executor blocks as UnsafeRow copies: one job
+    // per batch runs the stateful plan once and checkpoints its output, so
+    // nothing is converted to Rows or collected on the driver
+    val batches = new java.util.concurrent.ConcurrentSkipListMap[
+      Long, (org.apache.spark.rdd.RDD[org.apache.spark.sql.catalyst.InternalRow], Long)]()
+    val keep: (DataFrame, Long) => Unit = { (b, id) =>
+      val rows = b.queryExecution.toRdd.map(_.copy()).localCheckpoint()
+      batches.put(id, (rows, rows.count()))
+    }
+    val q = out.writeStream.queryName(name).outputMode(outputMode).foreachBatch(keep).start()
+    try q.processAllAvailable()
+    finally {
+      q.stop()
+      Bridge.detachStreamingListenerBuses(q)
+    }
+    // the checkpointed blocks hold the result rows; a tail-extended run's
+    // private copy and any uncacheable (in-memory-input) staging are done —
+    // delete them. A shared file-backed staging stays for the JVM: later
+    // replays of the same input skip the staging write entirely.
     scratch.foreach(graft.pipeline.TempFiles.deleteTree)
     ephemeralBase.foreach(graft.pipeline.TempFiles.deleteTree)
-    spark.table(name)
+    import scala.jdk.CollectionConverters._
+    val parts = batches.values.asScala.toSeq
+    // only the returned frame references the blocks: once the caller drops
+    // it, the ContextCleaner frees them
+    batches.clear()
+    Bridge.rowsFrame(spark, out.schema,
+      spark.sparkContext.union(parts.map(_._1)), parts.map(_._2).sum)
   }
 }

@@ -131,4 +131,52 @@ object Bridge {
           case other => other.toString
         }
     }
+
+  private def classic(spark: org.apache.spark.sql.SparkSession) =
+    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+
+  /** A session sharing `spark`'s SparkContext, cache and catalog, starting
+    * from copies of its conf, temp views and functions: conf set on the clone
+    * never reaches the original (`cloneSession` is private[sql]).
+    */
+  def cloneSession(spark: org.apache.spark.sql.SparkSession): org.apache.spark.sql.SparkSession =
+    classic(spark).cloneSession()
+
+  /** Detach a stopped query's streaming-query listener buses from the
+    * context's listener bus: the bus of the session that started it and the
+    * bus of the session clone it ran its batches in. Every session's
+    * StreamingQueryManager registers one, and nothing removes it, so each
+    * query started from a short-lived session would leave buses behind for
+    * the life of the SparkContext. Only for queries whose sessions start no
+    * further queries: their StreamingQueryListeners get no further events
+    * (SparkListeners still see every progress event).
+    */
+  def detachStreamingListenerBuses(q: org.apache.spark.sql.streaming.StreamingQuery): Unit = {
+    val exec = q.asInstanceOf[
+      org.apache.spark.sql.execution.streaming.runtime.StreamingQueryWrapper].streamingQuery
+    val busField = classOf[org.apache.spark.sql.classic.StreamingQueryManager]
+      .getDeclaredField("listenerBus")
+    busField.setAccessible(true)
+    for (session <- Seq(exec.sparkSession, exec.sparkSessionForStream))
+      session.sparkContext.listenerBus.removeListener(busField.get(session.streams)
+        .asInstanceOf[org.apache.spark.scheduler.SparkListenerInterface])
+  }
+
+  /** A frame in `spark` over rows already materialized as an RDD, with
+    * `rows` as its row count and `LocalRelation`'s size estimate (row width
+    * from the schema × rows), so planning sizes it the way it would size the
+    * same rows held on the driver.
+    */
+  def rowsFrame(spark: org.apache.spark.sql.SparkSession,
+                schema: org.apache.spark.sql.types.StructType,
+                data: org.apache.spark.rdd.RDD[org.apache.spark.sql.catalyst.InternalRow],
+                rows: Long): org.apache.spark.sql.DataFrame = {
+    val output = org.apache.spark.sql.catalyst.types.DataTypeUtils.toAttributes(schema)
+    val stats = org.apache.spark.sql.catalyst.plans.logical.Statistics(
+      org.apache.spark.sql.catalyst.plans.logical.statsEstimation.EstimationUtils
+        .getSizePerRow(output) * rows,
+      Some(BigInt(rows)))
+    org.apache.spark.sql.classic.Dataset.ofRows(classic(spark),
+      org.apache.spark.sql.execution.LogicalRDD(output, data)(classic(spark), Some(stats)))
+  }
 }
